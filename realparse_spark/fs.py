@@ -14,8 +14,10 @@ each operation maps to a different primitive:
 | read/write_text    | open()                  | small-object GET/PUT (sidecars become table properties) |
 | rmtree             | shutil.rmtree           | batched DeleteObjects / expire-snapshots |
 
-Every operator takes an explicit ``fs`` argument (default ``LOCAL``), so a
-deployment swaps ONE object in instead of hunting `os.*` calls; the
+The maintenance operators ``compact`` and ``upsert`` take an explicit
+``fs`` argument (default ``LOCAL``); the loader's watermark, key-sidecar and
+placeholder-table helpers call the module-level ``LOCAL`` directly.  Either
+way a deployment swaps one object instead of hunting `os.*` calls; the
 rename-based swap degrades to the table-format commit described in
 SCALE.md §Maintenance.  The interface is deliberately tiny — anything not
 needed by load/upsert/compact does not belong here.

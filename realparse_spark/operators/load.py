@@ -1,20 +1,30 @@
 """Incremental star-schema load pipeline (SURVEY.md §2.1 S6-S7, §2.3 F1-F3,
 §2.4 J2, §3.1-3.2).
 
-The reference loads each log line into 5-7 MySQL tables with per-row
-INSERT + `SELECT max(id)` read-backs (real_parse.pl:96-177) guarded by a
-high-watermark (`MAX(datetime)` of the already-loaded family,
-real_parse.pl:47-52).  Spark shape:
+The reference has two ETL scripts with one lifecycle: real_parse.pl loads
+style-5 lines into 7 MySQL tables, web_parse.pl loads combined-format lines
+into 3, each with per-row INSERT + `SELECT max(id)` read-backs
+(real_parse.pl:96-177) guarded by a high-watermark (`MAX(datetime)` of the
+already-loaded family, real_parse.pl:47-52).  Here that lifecycle is ONE
+skeleton, `_load`:
 
     read.text (pruned file set)
-      -> parse (narrow, codegen)
+      -> parse (narrow, codegen), persisted
+      -> quarantine lines with no timestamp
       -> watermark filter (strictly-greater, F1 semantics)
-      -> derive surrogate keys once (J2: no read-back, no serialization)
-      -> persist
-      -> N projected child writes (Parquet, partitioned by server_type)
+      -> derive surrogate keys once (J2: no read-back, no serialization),
+         persisted; one aggregate counts them and reserves the key range
+      -> access append (partitioned by server_type, access_date)
+      -> the family's child appends
 
-The whole load is shuffle-free; at 100 TB the only cost is the scan and the
-N columnar writes, all from one cached parse.
+`load_style5` and `load_weblog` only name what differs per family: the
+grammar (`parse_style5` / `parse_weblog`), the `server_type` (1 / 0) and
+`logging_style`/`stats_mask` literals (config values / NULL), the star
+tables, and the function that projects the keyed rows into the child
+tables (file, client, network, stats_mask1..3 / file, client).
+
+The load needs no shuffle to write; at 100 TB the cost is the scan and the
+columnar writes, all from one cached parse.
 
 Key semantics preserved from the reference: late rows (epoch <= watermark)
 are silently dropped, ties included (real_parse.pl:93 strict `>`), and
@@ -25,6 +35,7 @@ the watermark, replacing `LOCK TABLES`).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,7 +46,7 @@ from realparse_spark.operators.parse import (
     parse_style5,
     parse_weblog,
 )
-from realparse_spark.fs import LOCAL, WarehouseFS
+from realparse_spark.fs import LOCAL
 from realparse_spark.sources.logs import read_log_lines, read_server_config
 
 ACCESS_TABLES = ("access", "file", "client", "network", "stats_mask1", "stats_mask2", "stats_mask3")
@@ -47,9 +58,9 @@ ACCESS_TABLES = ("access", "file", "client", "network", "stats_mask1", "stats_ma
 COMPONENTS_SCHEMA = "component_id long, access_id long, component string"
 
 
-def _ensure_components(spark: SparkSession, warehouse: str, fs: WarehouseFS = LOCAL) -> None:
+def _ensure_components(spark: SparkSession, warehouse: str) -> None:
     p = os.path.join(warehouse, "components")
-    if not fs.exists(p):
+    if not LOCAL.exists(p):
         spark.createDataFrame([], COMPONENTS_SCHEMA).write.mode("overwrite").parquet(p)
 
 
@@ -65,9 +76,7 @@ def read_warehouse_table(spark: SparkSession, warehouse: str, name: str) -> Data
         return None
 
 
-def _family_watermark(
-    spark: SparkSession, warehouse: str, real_family: bool, fs: WarehouseFS = LOCAL
-) -> int | None:
+def _family_watermark(spark: SparkSession, warehouse: str, real_family: bool) -> int | None:
     """F1/F2 — max loaded epoch for one source family (real_parse.pl:47 vs
     web_parse.pl:42; the logging_style NULLness discriminator maps 1:1 to
     the server_type partition value, 1=real / 0=web).
@@ -80,9 +89,9 @@ def _family_watermark(
     construction: derived from the data itself, no sidecar to desync."""
     server_type = 1 if real_family else 0
     stdir = os.path.join(_table_path(warehouse, "access"), f"server_type={server_type}")
-    if not fs.is_dir(stdir):
+    if not LOCAL.is_dir(stdir):
         return None
-    entries = [e for e in fs.list_dir(stdir) if not e.startswith(("_", "."))]
+    entries = [e for e in LOCAL.list_dir(stdir) if not e.startswith(("_", "."))]
     dates = sorted(e.split("=", 1)[1] for e in entries if e.startswith("access_date="))
     if not dates:
         if entries:
@@ -106,9 +115,7 @@ def _max_key_path(warehouse: str) -> str:
     return os.path.join(_table_path(warehouse, "access"), "_max_key")
 
 
-def _next_key_base(
-    spark: SparkSession | None, warehouse: str, fs: WarehouseFS = LOCAL
-) -> int:
+def _next_key_base(spark: SparkSession | None, warehouse: str) -> int:
     """A2/J2 — the auto-increment base for this run's surrogate keys.
 
     Scale shape: the base comes from a one-line `_max_key` sidecar (a small
@@ -123,8 +130,8 @@ def _next_key_base(
     Legacy warehouses (written before the sidecar existed) fall back to the
     full-table max ONCE; the next run's reservation upgrades them."""
     p = _max_key_path(warehouse)
-    if fs.exists(p):
-        return int(fs.read_text(p).strip()) + 1
+    if LOCAL.exists(p):
+        return int(LOCAL.read_text(p).strip()) + 1
     if spark is None:
         return 0
     access = read_warehouse_table(spark, warehouse, "access")
@@ -134,19 +141,178 @@ def _next_key_base(
     return (row.m or 0) + 1
 
 
-def _reserve_key_range(keyed: DataFrame, warehouse: str, fs: WarehouseFS = LOCAL) -> None:
-    """Commit this run's max surrogate key BEFORE the table appends.
+def _reserve_key_range(warehouse: str, hi: int) -> None:
+    """Commit this run's max surrogate key `hi` BEFORE the table appends.
 
-    The max is an aggregate over the run's cached rows only (never a table
-    scan); the write is tmp + rename so a reader sees either the old or the
-    new value (rename maps to the table-format metadata commit at scale)."""
-    hi = keyed.agg(F.max("access_id").alias("m")).collect()[0].m
-    if hi is None:
-        return
-    fs.makedirs(_table_path(warehouse, "access"))
+    `hi` comes from the same aggregate over the run's cached rows that
+    counts them (never a table scan); the write is tmp + rename so a reader
+    sees either the old or the new value (rename maps to the table-format
+    metadata commit at scale)."""
+    LOCAL.makedirs(_table_path(warehouse, "access"))
     p = _max_key_path(warehouse)
-    fs.write_text(p + ".tmp", str(int(hi)))
-    fs.rename(p + ".tmp", p)
+    LOCAL.write_text(p + ".tmp", str(int(hi)))
+    LOCAL.rename(p + ".tmp", p)
+
+
+def _load(
+    spark: SparkSession,
+    lines: DataFrame,
+    warehouse: str,
+    parse: Callable[..., DataFrame],
+    server_type: int,
+    logging_style: int | None,
+    stats_mask: int | None,
+    tables: tuple[str, ...],
+    append_children: Callable[[DataFrame, int, str], dict[str, int]],
+) -> dict[str, int]:
+    """The one load skeleton: parse -> quarantine -> watermark -> key ->
+    reserve -> append.  `tables` names every star table the family fills;
+    `append_children(keyed, n, warehouse)` writes all but `access` and
+    returns their row counts."""
+    # Persist the parsed corpus BEFORE the quarantine split: the quarantine
+    # count, the quarantine write, and the keyed main pipeline all branch
+    # off this one DF — without the cache each branch would re-scan and
+    # re-regex the raw text (~3 full parse passes at 100 TB).
+    parsed = parse(lines, line_col="value").persist()
+    keyed = None
+    try:
+        # Quarantine: a line whose timestamp failed to parse (epoch NULL)
+        # cannot pass any watermark and would silently vanish; at 100 TB
+        # malformed lines are a certainty, so they are preserved for triage
+        # instead of dropped (ANSI-off yields NULLs, not job aborts).
+        bad = parsed.filter(F.col("epoch").isNull()).select("value", "source_file")
+        n_bad = bad.count()  # materializes the parse cache: the only full parse
+        if n_bad:
+            _append(bad, warehouse, "quarantine")
+        good = parsed.filter(F.col("epoch").isNotNull())
+
+        wm = _family_watermark(spark, warehouse, real_family=server_type == 1)
+        if wm is not None:
+            good = good.filter(F.col("epoch") > F.lit(wm))  # F1 strict '>'
+
+        base = _next_key_base(spark, warehouse)
+        # J2: one deterministic-enough surrogate per line, derived without any
+        # read-back; monotonically_increasing_id is unique per run, the base
+        # offset keeps runs disjoint (sparse like auto-increment with gaps).
+        keyed = good.withColumn(
+            "access_id", F.lit(base) + F.monotonically_increasing_id()
+        ).persist()
+        _ensure_components(spark, warehouse)
+        n, hi = keyed.agg(F.count(F.lit(1)), F.max("access_id")).collect()[0]
+        if n == 0:
+            return {t: 0 for t in tables} | {"quarantine": n_bad}
+        _reserve_key_range(warehouse, hi)
+
+        access = keyed.select(
+            "access_id", "client_ip_address", "identuser", "authuser",
+            F.to_timestamp("datetime").alias("datetime"), "gmt_offset",
+            F.lit(logging_style).cast("int").alias("logging_style"),
+            F.lit(stats_mask).cast("int").alias("stats_mask"),
+            F.lit(server_type).cast("int").alias("server_type"),
+            F.to_date(F.to_timestamp("datetime")).alias("access_date"),
+        )
+        _append(access, warehouse, "access")
+        return {"quarantine": n_bad, "access": n} | append_children(keyed, n, warehouse)
+    finally:
+        if keyed is not None:
+            keyed.unpersist()
+        parsed.unpersist()
+
+
+def _append_style5_children(keyed: DataFrame, n: int, warehouse: str) -> dict[str, int]:
+    """file, client, network (1:1 with access) and stats_mask1..3."""
+    file_df = keyed.select(
+        F.col("access_id").alias("file_id"),  # 1:1 with access -> same key
+        "method", "path", "name", "protocol_version", "status_code",
+        "bytes_sent", "file_size", "file_time", "sent_time",
+        F.lit(None).cast("timestamp").alias("start_time"),  # real_parse.pl:145
+        "presentation_id", "access_id",
+    )
+    _append(file_df, warehouse, "file")
+
+    client = parse_client_info(
+        keyed.select("access_id", "client_info", "client_GUID")
+    ).select(
+        F.col("access_id").alias("client_id"),
+        "client_info", "platform", "os_version", "client_version", "type",
+        "distribution", "language", "cpu", "embedded", "client_GUID",
+        "access_id",
+    )
+    _append(client, warehouse, "client")
+
+    network = keyed.select(
+        F.col("access_id").alias("network_id"),
+        "resends", "failed_resends",
+        F.lit(None).cast("string").alias("server_address"),  # real_parse.pl:173-175
+        F.lit(None).cast("long").alias("packets_sent"),
+        F.lit(None).cast("double").alias("average_bitrate"),
+        "access_id",
+        F.col("access_id").alias("file_id"),
+    )
+    _append(network, warehouse, "network")
+
+    # parse_style5 already materialized _brackets on keyed — no second
+    # regex pass over the line corpus
+    stats = explode_stats_masks(keyed, key_cols=("access_id",)).persist()
+    try:
+        s1 = stats.filter(F.col("stat_type") == 1).select(
+            F.col("access_id").alias("id"),
+            "packets_received", "out_of_order", "missing", "early", "late",
+            "audio_format", "access_id", F.col("access_id").alias("file_id"),
+        )
+        _append(s1, warehouse, "stats_mask1")
+
+        s2 = stats.filter(F.col("stat_type") == 2).select(
+            F.col("access_id").alias("id"),
+            "bandwidth", "available", "highest", "lowest", "average",
+            "requested", "received", F.col("s2_late").alias("late"),
+            "rebuffering", "transport", "startup", "audio_format",
+            "access_id", F.col("access_id").alias("file_id"),
+        )
+        _append(s2, warehouse, "stats_mask2")
+
+        s3 = stats.filter(F.col("stat_type") == 3).select(
+            F.col("access_id").alias("id"),
+            F.col("raw_stat"),
+            "access_id", F.col("access_id").alias("file_id"),
+        )
+        _append(s3, warehouse, "stats_mask3")
+        # one grouped count answers all three stats tables
+        per_type = dict(stats.groupBy("stat_type").count().collect())
+    finally:
+        stats.unpersist()
+    return {"file": n, "client": n, "network": n} | {
+        f"stats_mask{k}": per_type.get(k, 0) for k in (1, 2, 3)
+    }
+
+
+def _append_web_children(keyed: DataFrame, n: int, warehouse: str) -> dict[str, int]:
+    """file and client; the web grammar has no file_size/time/presentation
+    fields or client_info decomposition, so those stay NULL."""
+    file_df = keyed.select(
+        F.col("access_id").alias("file_id"),
+        "method", "path", "name", "protocol_version", "status_code",
+        "bytes_sent",
+        F.lit(None).cast("long").alias("file_size"),  # web rows: NULLs
+        F.lit(None).cast("int").alias("file_time"),
+        F.lit(None).cast("int").alias("sent_time"),
+        F.lit(None).cast("timestamp").alias("start_time"),
+        F.lit(None).cast("int").alias("presentation_id"),
+        "access_id",
+    )
+    _append(file_df, warehouse, "file")
+
+    client = keyed.select(
+        F.col("access_id").alias("client_id"),
+        F.col("user_agent").alias("client_info"),  # web_parse.pl:129
+        *[F.lit(None).cast("string").alias(c) for c in (
+            "platform", "os_version", "client_version", "type",
+            "distribution", "language", "cpu", "embedded", "client_GUID",
+        )],
+        "access_id",
+    )
+    _append(client, warehouse, "client")
+    return {"file": n, "client": n}
 
 
 def load_style5(
@@ -163,124 +329,12 @@ def load_style5(
         logging_style, stats_mask = read_server_config(config_path)
         if logging_style != 5:  # F3 gate (real_parse.pl:58,186-188)
             return {}
-
-    lines = read_log_lines(spark, log_dir, prefix, latest)
-    # Persist the parsed corpus BEFORE the quarantine split: the quarantine
-    # count, the quarantine write, and the keyed main pipeline all branch
-    # off this one DF — without the cache each branch would re-scan and
-    # re-regex the raw text (~3 full parse passes at 100 TB).
-    parsed = parse_style5(lines, line_col="value").persist()
-    keyed = None
-    try:
-        # Quarantine: a line whose timestamp failed to parse (epoch NULL)
-        # cannot pass any watermark and would silently vanish; at 100 TB
-        # malformed lines are a certainty, so they are preserved for triage
-        # instead of dropped (ANSI-off yields NULLs, not job aborts).
-        bad = parsed.filter(F.col("epoch").isNull()).select("value", "source_file")
-        n_bad = bad.count()  # materializes the parse cache: the only full parse
-        if n_bad:
-            _append(bad, warehouse, "quarantine")
-        good = parsed.filter(F.col("epoch").isNotNull())
-
-        wm = _family_watermark(spark, warehouse, real_family=True)
-        if wm is not None:
-            good = good.filter(F.col("epoch") > F.lit(wm))  # F1 strict '>'
-
-        base = _next_key_base(spark, warehouse)
-        # J2: one deterministic-enough surrogate per line, derived without any
-        # read-back; monotonically_increasing_id is unique per run, the base
-        # offset keeps runs disjoint (sparse like auto-increment with gaps).
-        keyed = good.withColumn(
-            "access_id", F.lit(base) + F.monotonically_increasing_id()
-        ).persist()
-        _ensure_components(spark, warehouse)
-        n = keyed.count()
-        if n == 0:
-            return {t: 0 for t in ACCESS_TABLES} | {"quarantine": n_bad}
-        _reserve_key_range(keyed, warehouse)
-
-        counts: dict[str, int] = {"quarantine": n_bad}
-
-        access = keyed.select(
-            "access_id", "client_ip_address", "identuser", "authuser",
-            F.to_timestamp("datetime").alias("datetime"), "gmt_offset",
-            F.lit(logging_style).cast("int").alias("logging_style"),
-            F.lit(stats_mask).cast("int").alias("stats_mask"),
-            F.lit(1).cast("int").alias("server_type"),  # real_parse.pl:16
-            F.to_date(F.to_timestamp("datetime")).alias("access_date"),
-        )
-        _append(access, warehouse, "access")
-        counts["access"] = n
-
-        file_df = keyed.select(
-            F.col("access_id").alias("file_id"),  # 1:1 with access -> same key
-            "method", "path", "name", "protocol_version", "status_code",
-            "bytes_sent", "file_size", "file_time", "sent_time",
-            F.lit(None).cast("timestamp").alias("start_time"),  # real_parse.pl:145
-            "presentation_id", "access_id",
-        )
-        _append(file_df, warehouse, "file")
-        counts["file"] = n
-
-        client = parse_client_info(
-            keyed.select("access_id", "client_info", "client_GUID")
-        ).select(
-            F.col("access_id").alias("client_id"),
-            "client_info", "platform", "os_version", "client_version", "type",
-            "distribution", "language", "cpu", "embedded", "client_GUID",
-            "access_id",
-        )
-        _append(client, warehouse, "client")
-        counts["client"] = n
-
-        network = keyed.select(
-            F.col("access_id").alias("network_id"),
-            "resends", "failed_resends",
-            F.lit(None).cast("string").alias("server_address"),  # real_parse.pl:173-175
-            F.lit(None).cast("long").alias("packets_sent"),
-            F.lit(None).cast("double").alias("average_bitrate"),
-            "access_id",
-            F.col("access_id").alias("file_id"),
-        )
-        _append(network, warehouse, "network")
-        counts["network"] = n
-
-        # parse_style5 already materialized _brackets on keyed — no second
-        # regex pass over the line corpus
-        stats = explode_stats_masks(keyed, key_cols=("access_id",)).persist()
-        try:
-            s1 = stats.filter(F.col("stat_type") == 1).select(
-                F.col("access_id").alias("id"),
-                "packets_received", "out_of_order", "missing", "early", "late",
-                "audio_format", "access_id", F.col("access_id").alias("file_id"),
-            )
-            _append(s1, warehouse, "stats_mask1")
-            counts["stats_mask1"] = s1.count()
-
-            s2 = stats.filter(F.col("stat_type") == 2).select(
-                F.col("access_id").alias("id"),
-                "bandwidth", "available", "highest", "lowest", "average",
-                "requested", "received", F.col("s2_late").alias("late"),
-                "rebuffering", "transport", "startup", "audio_format",
-                "access_id", F.col("access_id").alias("file_id"),
-            )
-            _append(s2, warehouse, "stats_mask2")
-            counts["stats_mask2"] = s2.count()
-
-            s3 = stats.filter(F.col("stat_type") == 3).select(
-                F.col("access_id").alias("id"),
-                F.col("raw_stat"),
-                "access_id", F.col("access_id").alias("file_id"),
-            )
-            _append(s3, warehouse, "stats_mask3")
-            counts["stats_mask3"] = s3.count()
-        finally:
-            stats.unpersist()
-        return counts
-    finally:
-        if keyed is not None:
-            keyed.unpersist()
-        parsed.unpersist()
+    return _load(
+        spark, read_log_lines(spark, log_dir, prefix, latest), warehouse, parse_style5,
+        server_type=1,  # real_parse.pl:16
+        logging_style=logging_style, stats_mask=stats_mask,
+        tables=ACCESS_TABLES, append_children=_append_style5_children,
+    )
 
 
 def load_weblog(
@@ -293,69 +347,12 @@ def load_weblog(
     """Secondary ETL (web_parse.pl end-to-end): combined-format lines
     filtered to .wma/.wmv, NULL logging_style/stats_mask, server_type=0,
     access+file+client only (no network/stats rows)."""
-    lines = read_log_lines(spark, log_dir, prefix, latest)
-    # Same single-scan shape as load_style5: one persisted parse feeds the
-    # quarantine count/write and the keyed pipeline.
-    parsed = parse_weblog(lines, line_col="value").persist()
-    keyed = None
-    try:
-        bad = parsed.filter(F.col("epoch").isNull()).select("value", "source_file")
-        n_bad = bad.count()
-        if n_bad:
-            _append(bad, warehouse, "quarantine")
-        good = parsed.filter(F.col("epoch").isNotNull())
-
-        wm = _family_watermark(spark, warehouse, real_family=False)
-        if wm is not None:
-            good = good.filter(F.col("epoch") > F.lit(wm))
-
-        base = _next_key_base(spark, warehouse)
-        keyed = good.withColumn(
-            "access_id", F.lit(base) + F.monotonically_increasing_id()
-        ).persist()
-        n = keyed.count()
-        if n == 0:
-            return {t: 0 for t in ("access", "file", "client")} | {"quarantine": n_bad}
-        _reserve_key_range(keyed, warehouse)
-
-        access = keyed.select(
-            "access_id", "client_ip_address", "identuser", "authuser",
-            F.to_timestamp("datetime").alias("datetime"), "gmt_offset",
-            F.lit(None).cast("int").alias("logging_style"),  # web_parse.pl:87
-            F.lit(None).cast("int").alias("stats_mask"),
-            F.lit(0).cast("int").alias("server_type"),  # web_parse.pl:15
-            F.to_date(F.to_timestamp("datetime")).alias("access_date"),
-        )
-        _append(access, warehouse, "access")
-
-        file_df = keyed.select(
-            F.col("access_id").alias("file_id"),
-            "method", "path", "name", "protocol_version", "status_code",
-            "bytes_sent",
-            F.lit(None).cast("long").alias("file_size"),  # web rows: NULLs
-            F.lit(None).cast("int").alias("file_time"),
-            F.lit(None).cast("int").alias("sent_time"),
-            F.lit(None).cast("timestamp").alias("start_time"),
-            F.lit(None).cast("int").alias("presentation_id"),
-            "access_id",
-        )
-        _append(file_df, warehouse, "file")
-
-        client = keyed.select(
-            F.col("access_id").alias("client_id"),
-            F.col("user_agent").alias("client_info"),  # web_parse.pl:129
-            *[F.lit(None).cast("string").alias(c) for c in (
-                "platform", "os_version", "client_version", "type",
-                "distribution", "language", "cpu", "embedded", "client_GUID",
-            )],
-            "access_id",
-        )
-        _append(client, warehouse, "client")
-        return {"access": n, "file": n, "client": n, "quarantine": n_bad}
-    finally:
-        if keyed is not None:
-            keyed.unpersist()
-        parsed.unpersist()
+    return _load(
+        spark, read_log_lines(spark, log_dir, prefix, latest), warehouse, parse_weblog,
+        server_type=0,  # web_parse.pl:15
+        logging_style=None, stats_mask=None,  # web_parse.pl:87
+        tables=("access", "file", "client"), append_children=_append_web_children,
+    )
 
 
 def _append(df: DataFrame, warehouse: str, name: str) -> None:

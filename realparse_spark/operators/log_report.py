@@ -14,7 +14,7 @@ style-5 lines: parse -> report in one plan, oracle'd in DuckDB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from realparse_spark.functions.scalars import duration_hms
@@ -54,41 +54,32 @@ def pull_report(
     joined = fact.join(F.broadcast(dims), F.expr("name LIKE pattern"), "inner")
 
     gated = F.col("pattern").rlike(r"\.(wmv|wma|mov)")  # F9 short-circuit
-    agg = joined.groupBy("customer_id", "project_id", "pattern", "company_name").agg(
+    return _report_metrics(joined, ["customer_id", "project_id", "pattern", "company_name"], gated)
+
+
+def _report_metrics(fact: DataFrame, keys: list[str], gated: Column) -> DataFrame:
+    """A3-A5 per group of `keys`, then C11 durations; a group matching
+    `gated` (F9) or with no value (F12) reports N/A."""
+    sent_ok = (F.col("sent_time") != 0) & (F.col("sent_time") <= F.col("file_time"))
+    sent = F.when(sent_ok, F.col("sent_time"))
+    agg = fact.groupBy(*keys).agg(
         F.count("name").alias("n_views"),
         F.max(F.when(F.col("file_time") != 0, F.col("file_time"))).alias("_clip"),
         F.round(
             # try_divide: a group where no row passes the sent_ok guard has
             # count 0 — ANSI sessions raise DIVIDE_BY_ZERO on plain `/`,
             # while the DuckDB oracle yields NULL. try_divide yields NULL too.
-            F.try_divide(
-                F.sum(
-                    F.when(
-                        (F.col("sent_time") != 0) & (F.col("sent_time") <= F.col("file_time")),
-                        F.col("sent_time"),
-                    ).cast("decimal(18,2)")
-                ).cast("double"),
-                F.count(
-                    F.when(
-                        (F.col("sent_time") != 0) & (F.col("sent_time") <= F.col("file_time")),
-                        F.col("sent_time"),
-                    )
-                ),
-            ),
+            F.try_divide(F.sum(sent.cast("decimal(18,2)")).cast("double"), F.count(sent)),
             0,
         ).alias("_avg"),
-        F.max(
-            F.when(
-                (F.col("sent_time") != 0) & (F.col("sent_time") <= F.col("file_time")),
-                F.col("sent_time"),
-            )
-        ).alias("_longest"),
+        F.max(sent).alias("_longest"),
     )
+
     def na(col):
         return F.coalesce(F.when(~gated, col), F.lit("N/A"))
 
     return agg.select(
-        "customer_id", "project_id", "pattern", "company_name", "n_views",
+        *keys, "n_views",
         na(duration_hms(F.col("_clip"))).alias("clip_length"),
         na(duration_hms(F.col("_avg"))).alias("avg_view_time"),
         na(duration_hms(F.col("_longest"))).alias("longest_view_time"),
@@ -107,28 +98,7 @@ def q_log_report_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would split them; the report re-joins them — skip the round trip).
     fact = parsed.filter(~F.col("client_ip_address").like("10.1%"))  # F5 analog
     gated = F.col("path").rlike(r"archive|audio")  # F9 analog on the group key
-    sent_ok = (F.col("sent_time") != 0) & (F.col("sent_time") <= F.col("file_time"))
-    agg = fact.groupBy("path").agg(
-        F.count("name").alias("n_views"),
-        F.max(F.when(F.col("file_time") != 0, F.col("file_time"))).alias("_clip"),
-        F.round(
-            F.try_divide(  # zero-count group: NULL, not ANSI DIVIDE_BY_ZERO
-                F.sum(F.when(sent_ok, F.col("sent_time")).cast("decimal(18,2)")).cast("double"),
-                F.count(F.when(sent_ok, F.col("sent_time"))),
-            ),
-            0,
-        ).alias("_avg"),
-        F.max(F.when(sent_ok, F.col("sent_time"))).alias("_longest"),
-    )
-    def na(col):
-        return F.coalesce(F.when(~gated, col), F.lit("N/A"))
-
-    return agg.select(
-        "path", "n_views",
-        na(duration_hms(F.col("_clip"))).alias("clip_length"),
-        na(duration_hms(F.col("_avg"))).alias("avg_view_time"),
-        na(duration_hms(F.col("_longest"))).alias("longest_view_time"),
-    )
+    return _report_metrics(fact, ["path"], gated)
 
 
 LOG_REPORT_E2E_SQL = (

@@ -59,23 +59,59 @@ def bracket_groups(line: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def parse_style5(df: DataFrame, line_col: str = "value") -> DataFrame:
-    """Parse RealServer style-5 lines into the access/file/network field set
-    (real_parse.pl:61-183: P1-P10 composed).  One narrow projection — no
-    shuffle, fully pushdown/codegen friendly."""
-    line = F.col(line_col)
-    pat_req = r'"(\S+) (.*?) (\S+)"'
-
-    df = (
+def _request_head(df: DataFrame, line: Column, pat_req: str, toks_col: str) -> DataFrame:
+    """P1-P3, P6 and the quoted request triple — the head both grammars
+    share; `pat_req` groups 1-3 are method, file and protocol."""
+    return (
         df.withColumn("client_ip_address", leading_token(line))
         .withColumn("identuser", F.lit("-"))  # P2 constants (real_parse.pl:68)
         .withColumn("authuser", F.lit("-"))
-        .withColumn("_toks_raw", numeric_tokens(line))
+        .withColumn(toks_col, numeric_tokens(line))
         .withColumn("_brackets", bracket_groups(line))
         .withColumn("method", F.regexp_extract(line, pat_req, 1))
         .withColumn("_filename", F.regexp_extract(line, pat_req, 2))
         .withColumn("protocol_version", F.regexp_extract(line, pat_req, 3))
     )
+
+
+def _tok(i: int, typ: str) -> Column:
+    """P5 — the i-th numeric token (negative counts from the tail), typed."""
+    return F.try_element_at("_toks", F.lit(i)).cast(typ)
+
+
+def _timestamp(df: DataFrame) -> DataFrame:
+    """P7/P8 — datetime, gmt_offset and epoch from bracket[0]."""
+    ts_group, pat_ts = F.try_element_at("_brackets", F.lit(1)), r"^(.+) -(\d+)$"
+    return (
+        df.withColumn("_ts_str", F.regexp_extract(ts_group, pat_ts, 1))
+        .withColumn("gmt_offset", F.regexp_extract(ts_group, pat_ts, 2))
+        .withColumn("_ts", parse_clf_timestamp(F.col("_ts_str")))
+        .withColumn("datetime", format_datetime(F.col("_ts")))
+        .withColumn("epoch", epoch_seconds(F.col("_ts")))
+    )
+
+
+def _path_name(df: DataFrame) -> DataFrame:
+    """P10 — split the requested file into path and query-truncated name."""
+    raw_name = F.substring_index("_filename", "/", -1)
+    truncated = F.regexp_extract(raw_name, r"^(.+\.\w*)", 1)
+    return df.withColumn("name", F.when(truncated == "", raw_name).otherwise(truncated)).withColumn(
+        "path",
+        F.when(F.col("_filename").contains("/"),
+               F.expr("substring(_filename, 1, length(_filename) - length(substring_index(_filename, '/', -1)) - 1)"))
+        .otherwise(F.lit("")),
+    )
+
+
+# helper columns every parser drops before returning
+_SCRATCH = ("_toks", "_ts_str", "_ts", "_filename")
+
+
+def parse_style5(df: DataFrame, line_col: str = "value") -> DataFrame:
+    """Parse RealServer style-5 lines into the access/file/network field set
+    (real_parse.pl:61-183: P1-P10 composed).  One narrow projection — no
+    shuffle, fully pushdown/codegen friendly."""
+    df = _request_head(df, F.col(line_col), r'"(\S+) (.*?) (\S+)"', "_toks_raw")
     # P4 heuristic drop
     df = df.withColumn(
         "_toks",
@@ -84,40 +120,24 @@ def parse_style5(df: DataFrame, line_col: str = "value") -> DataFrame:
             F.expr("slice(_toks_raw, 2, size(_toks_raw))"),
         ).otherwise(F.col("_toks_raw")),
     )
-    # P7/P8 timestamp from bracket[0]
-    df = (
-        df.withColumn("_ts_str", F.regexp_extract(F.try_element_at("_brackets", F.lit(1)), r"^(.+) -(\d+)$", 1))
-        .withColumn("gmt_offset", F.regexp_extract(F.try_element_at("_brackets", F.lit(1)), r"^(.+) -(\d+)$", 2))
-        .withColumn("_ts", parse_clf_timestamp(F.col("_ts_str")))
-        .withColumn("datetime", format_datetime(F.col("_ts")))
-        .withColumn("epoch", epoch_seconds(F.col("_ts")))
-    )
+    df = _timestamp(df)
     # P5 positional destructure: head 2 + tail-anchored 6
     df = (
-        df.withColumn("status_code", F.try_element_at("_toks", F.lit(1)).cast("int"))
-        .withColumn("bytes_sent", F.try_element_at("_toks", F.lit(2)).cast("long"))
-        .withColumn("file_size", F.try_element_at("_toks", F.lit(-6)).cast("long"))
-        .withColumn("file_time", F.try_element_at("_toks", F.lit(-5)).cast("int"))
-        .withColumn("sent_time", F.try_element_at("_toks", F.lit(-4)).cast("int"))
-        .withColumn("resends", F.try_element_at("_toks", F.lit(-3)).cast("int"))
-        .withColumn("failed_resends", F.try_element_at("_toks", F.lit(-2)).cast("int"))
-        .withColumn("presentation_id", F.try_element_at("_toks", F.lit(-1)).cast("int"))
+        df.withColumn("status_code", _tok(1, "int"))
+        .withColumn("bytes_sent", _tok(2, "long"))
+        .withColumn("file_size", _tok(-6, "long"))
+        .withColumn("file_time", _tok(-5, "int"))
+        .withColumn("sent_time", _tok(-4, "int"))
+        .withColumn("resends", _tok(-3, "int"))
+        .withColumn("failed_resends", _tok(-2, "int"))
+        .withColumn("presentation_id", _tok(-1, "int"))
     )
-    # P10 path/name split
-    raw_name = F.substring_index("_filename", "/", -1)
-    truncated = F.regexp_extract(raw_name, r"^(.+\.\w*)", 1)
     df = (
-        df.withColumn("name", F.when(truncated == "", raw_name).otherwise(truncated))
-        .withColumn(
-            "path",
-            F.when(F.col("_filename").contains("/"),
-                   F.expr("substring(_filename, 1, length(_filename) - length(substring_index(_filename, '/', -1)) - 1)"))
-            .otherwise(F.lit("")),
-        )
+        _path_name(df)
         .withColumn("client_info", F.try_element_at("_brackets", F.lit(2)))
         .withColumn("client_GUID", F.try_element_at("_brackets", F.lit(3)))
     )
-    return df.drop("_toks_raw", "_toks", "_ts_str", "_ts", "_filename")
+    return df.drop("_toks_raw", *_SCRATCH)
 
 
 def parse_weblog(df: DataFrame, line_col: str = "value") -> DataFrame:
@@ -127,34 +147,12 @@ def parse_weblog(df: DataFrame, line_col: str = "value") -> DataFrame:
     pat_req = r'"(\S+) (.*?) (\S+)" .* "-" "(.*?)"'
     df = df.filter(line.rlike(r"\.wma|\.wmv"))  # F4 (web_parse.pl:59)
     df = (
-        df.withColumn("client_ip_address", leading_token(line))
-        .withColumn("identuser", F.lit("-"))
-        .withColumn("authuser", F.lit("-"))
-        .withColumn("_toks", numeric_tokens(line))
-        .withColumn("_brackets", bracket_groups(line))
-        .withColumn("method", F.regexp_extract(line, pat_req, 1))
-        .withColumn("_filename", F.regexp_extract(line, pat_req, 2))
-        .withColumn("protocol_version", F.regexp_extract(line, pat_req, 3))
+        _request_head(df, line, pat_req, "_toks")
         .withColumn("user_agent", F.regexp_extract(line, pat_req, 4))
-        .withColumn("status_code", F.try_element_at("_toks", F.lit(1)).cast("int"))
-        .withColumn("bytes_sent", F.try_element_at("_toks", F.lit(2)).cast("long"))
+        .withColumn("status_code", _tok(1, "int"))
+        .withColumn("bytes_sent", _tok(2, "long"))
     )
-    df = (
-        df.withColumn("_ts_str", F.regexp_extract(F.try_element_at("_brackets", F.lit(1)), r"^(.+) -(\d+)$", 1))
-        .withColumn("gmt_offset", F.regexp_extract(F.try_element_at("_brackets", F.lit(1)), r"^(.+) -(\d+)$", 2))
-        .withColumn("_ts", parse_clf_timestamp(F.col("_ts_str")))
-        .withColumn("datetime", format_datetime(F.col("_ts")))
-        .withColumn("epoch", epoch_seconds(F.col("_ts")))
-    )
-    raw_name = F.substring_index("_filename", "/", -1)
-    truncated = F.regexp_extract(raw_name, r"^(.+\.\w*)", 1)
-    df = df.withColumn("name", F.when(truncated == "", raw_name).otherwise(truncated)).withColumn(
-        "path",
-        F.when(F.col("_filename").contains("/"),
-               F.expr("substring(_filename, 1, length(_filename) - length(substring_index(_filename, '/', -1)) - 1)"))
-        .otherwise(F.lit("")),
-    )
-    return df.drop("_toks", "_ts_str", "_ts", "_filename")
+    return _path_name(_timestamp(df)).drop(*_SCRATCH)
 
 
 def parse_positional(

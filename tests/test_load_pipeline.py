@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from realparse_spark.operators.load import load_style5, load_weblog, read_warehouse_table
+from realparse_spark.operators.load import ACCESS_TABLES, load_style5, load_weblog, read_warehouse_table
 from realparse_spark.sources.logs import latest_files, read_server_config
 
 
@@ -248,6 +248,16 @@ def test_components_placeholder(spark, log_dir, tmp_path):
     load_style5(spark, str(log_dir), wh)  # second run: still empty, no append
     assert read_warehouse_table(spark, wh, "components").count() == 0
 
+    # a warehouse only the web loader has written declares it too
+    d = tmp_path / "weblogs_comp"
+    d.mkdir()
+    (d / "log.1").write_text(WEB_LINES[0] + "\n")
+    wh_web = str(tmp_path / "wh_comp_web")
+    load_weblog(spark, str(d), wh_web)
+    comp = read_warehouse_table(spark, wh_web, "components")
+    assert comp is not None and comp.count() == 0
+    assert comp.columns == ["component_id", "access_id", "component"]
+
 
 def test_todays_file_mtime_pick(spark, log_dir):
     """S3 — open_log.pl:22-28 picks the file whose mtime date is today;
@@ -272,15 +282,17 @@ def test_config_gate(spark, log_dir, tmp_path):
     assert load_style5(spark, log_dir, str(tmp_path / "wh2"), config_path=str(cfg)) == {}
 
 
+WEB_LINES = [
+    '10.0.22.9 - - [13/Oct/2002:10:15:01 -0800] "GET /media/s/intro.wmv HTTP/1.1" 200 524288 "-" "Mozilla/4.0 (WMP 7.1)"',
+    '10.0.22.9 - - [13/Oct/2002:10:16:01 -0800] "GET /media/s/a.wma HTTP/1.1" 200 1000 "-" "NSPlayer/9.0"',
+    '10.0.22.9 - - [13/Oct/2002:10:17:01 -0800] "GET /index.html HTTP/1.1" 200 99 "-" "Mozilla/5.0"',
+]
+
+
 def test_weblog_load(spark, tmp_path):
     d = tmp_path / "weblogs"
     d.mkdir()
-    lines = [
-        '10.0.22.9 - - [13/Oct/2002:10:15:01 -0800] "GET /media/s/intro.wmv HTTP/1.1" 200 524288 "-" "Mozilla/4.0 (WMP 7.1)"',
-        '10.0.22.9 - - [13/Oct/2002:10:16:01 -0800] "GET /media/s/a.wma HTTP/1.1" 200 1000 "-" "NSPlayer/9.0"',
-        '10.0.22.9 - - [13/Oct/2002:10:17:01 -0800] "GET /index.html HTTP/1.1" 200 99 "-" "Mozilla/5.0"',
-    ]
-    (d / "log.1").write_text("\n".join(lines) + "\n")
+    (d / "log.1").write_text("\n".join(WEB_LINES) + "\n")
     wh = str(tmp_path / "wh3")
     counts = load_weblog(spark, str(d), wh)
     assert counts["access"] == 2  # F4: .html row filtered out
@@ -295,6 +307,57 @@ def test_weblog_load(spark, tmp_path):
     # both families share the warehouse: style-5 watermark is independent (F2)
     counts2 = load_weblog(spark, str(d), wh)
     assert counts2["access"] == 0
+
+
+def _table_rows(spark, wh: str, names) -> dict[str, int]:
+    tables = {t: read_warehouse_table(spark, wh, t) for t in names}
+    return {t: 0 if df is None else df.count() for t, df in tables.items()}
+
+
+@pytest.mark.parametrize("family", ["style5", "web"])
+def test_load_counts_match_table_rows(spark, tmp_path, family):
+    """Each returned count equals the rows its table gained, on a first and
+    on an incremental load (where the older rotation re-read is dropped by
+    the watermark and only the new lines land)."""
+    d = tmp_path / "logs"
+    d.mkdir()
+    if family == "style5":
+        loader, prefix = load_style5, "rmaccess.log."
+        first = [
+            style5_line("10.0.0.2", "12/Oct/2002:09:00:00", "/media/a/one.rm", stats=STATS_FULL),
+            style5_line("10.0.0.3", "12/Oct/2002:10:00:00", "/media/a/two.rm", stats=" [Stat3: rawdata]"),
+            "not a parseable line",
+        ]
+        second = [
+            style5_line("10.0.0.4", "13/Oct/2002:09:00:00", "/media/b/three.rm", stats=STATS_FULL),
+            style5_line("10.0.0.5", "13/Oct/2002:09:30:00", "/media/b/four.rm", stats=" [Stat1: 5 4 3 2 1 ]"),
+            style5_line("10.0.0.6", "13/Oct/2002:10:00:00", "/media/b/five.rm"),
+            "another unparseable line",
+        ]
+        # (access, quarantine) per run; run 2 re-reads rotation 1, whose
+        # lines fall under the watermark but whose bad line is quarantined again
+        expect = [(2, 1), (3, 2)]
+    else:
+        loader, prefix = load_weblog, "log."
+        first = [*WEB_LINES, '10.0.22.9 - - [garbled] "GET /media/s/bad.wmv HTTP/1.1" 200 1 "-" "x"']
+        second = [
+            '10.0.22.8 - - [14/Oct/2002:08:00:00 -0800] "GET /media/t/b.wmv HTTP/1.1" 200 77 "-" "NSPlayer/9.0"',
+            '10.0.22.8 - - [14/Oct/2002:08:01:00 -0800] "GET /media/t/c.wma HTTP/1.1" 200 88 "-" "NSPlayer/9.0"',
+            '10.0.22.8 - - [14/Oct/2002:08:02:00 -0800] "GET /media/t/d.wma HTTP/1.1" 200 99 "-" "NSPlayer/9.0"',
+        ]
+        expect = [(2, 1), (3, 1)]  # the .html line is filtered out (F4)
+    wh = str(tmp_path / "wh")
+    for i, (rotation, want) in enumerate(zip([first, second], expect), start=1):
+        (d / f"{prefix}2002101{i}").write_text("\n".join(rotation) + "\n")
+        before = _table_rows(spark, wh, (*ACCESS_TABLES, "quarantine"))
+        counts = loader(spark, str(d), wh)
+        after = _table_rows(spark, wh, (*ACCESS_TABLES, "quarantine"))
+        gained = {t: after[t] - before[t] for t in counts}
+        assert counts == gained, (i, counts, gained)
+        assert (counts["access"], counts["quarantine"]) == want
+        assert all(after[t] == before[t] for t in after if t not in counts)
+    if family == "style5":
+        assert counts["stats_mask1"] == 2 and counts["stats_mask2"] == 1 and counts["stats_mask3"] == 0
 
 
 def test_watermark_legacy_layout_fallback(spark, tmp_path):

@@ -14,7 +14,8 @@ Scale design notes (the part that matters at 100 TB):
             set; LSH banding makes candidate generation O(docs x bands),
             i.e. linear scans + one groupBy per band batch — the only
             strategy that survives 100 TB.  Signatures are built with
-            one posexplode x K min-aggregation, all JVM-side.
+            one shingle explode x K min-aggregation (map-side partial
+            aggregation), all JVM-side and codegen'd.
 - simhash:  64-bit signature via bitwise vote over token hashes; near-dup
             candidates join on 16-bit chunk equality (pigeonhole: hamming
             <= 3 guarantees one of 4 chunks equal).
@@ -655,46 +656,70 @@ DEDUP_CONTAINMENT_SQL = (
 # ---------------------------------------------------------------------------
 
 
-def minhash_signatures(docs: DataFrame, n: int = 3, k: int = 32) -> DataFrame:
-    """K-permutation MinHash signatures over word-n-gram shingles.
-    Shape: hash each token ONCE (xxhash64), combine per-window with integer
-    arithmetic (no per-shingle string building, no distinct — min() is
-    duplicate-insensitive), then take each permutation's minimum with
-    `array_min(transform(...))` INSIDE the row.  The whole signature build
-    is a narrow projection: zero shuffles, scan-speed at any scale (the
-    previous shape exploded shingles into rows and re-grouped by doc_id —
-    a full shuffle of |docs| x |shingles| rows that this plan deletes).
+# The shingle combine over a per-doc token-hash array `_th` (each hash
+# reduced to 31 bits): three consecutive hashes -> one 31-bit shingle hash
+# with integer arithmetic (no per-shingle string building, no distinct —
+# min() is duplicate-insensitive).  a < p and h < p keep every intermediate
+# << 2^63, so nothing overflows even under ANSI mode.  Docs with fewer than
+# 3 tokens emit one partial shingle (missing positions hash as 0 via
+# try_element_at -> ifnull) instead of aborting: under the driver's ANSI
+# session a plain element_at on a short token array raises
+# INVALID_ARRAY_INDEX_IN_ELEMENT_AT.  Every doc therefore has >= 1 shingle,
+# even an empty or NULL text.
+_SHINGLES = (
+    "transform(sequence(1, greatest(size(_th)-2, 1)),"
+    " i -> pmod(ifnull(try_element_at(_th,i),0)*1000003"
+    "        + ifnull(try_element_at(_th,i+1),0)*8191"
+    "        + ifnull(try_element_at(_th,i+2),0), 2147483647))"
+)
 
-    Docs with fewer than n tokens emit one partial shingle (missing
-    positions hash as 0 via try_element_at -> ifnull) instead of
-    aborting: under the driver's ANSI session a plain element_at on a
-    short token array raises INVALID_ARRAY_INDEX_IN_ELEMENT_AT."""
+
+def _token_hashes(docs: DataFrame, hash_sql: str) -> DataFrame:
+    """(doc_id, _th): every whitespace token's `hash_sql` (an expression
+    over `t`), reduced to 31 bits — the input of `_minhash_kernel`."""
+    toks = docs.select("doc_id", ws_tokens(F.col("text")).alias("_toks"))
+    return toks.select(
+        "doc_id",
+        F.expr(f"transform(_toks, t -> pmod({hash_sql}, 2147483647))").alias("_th"),
+    )
+
+
+def _minhash_kernel(th: DataFrame, k: int, prefix: str) -> DataFrame:
+    """The one MinHash kernel: (doc_id, _th) -> (doc_id, {prefix}_0 ..
+    {prefix}_{k-1}), each one permutation's minimum over the doc's
+    `_SHINGLES`.  `doc_id` is the key: one signature row per doc_id.
+
+    The shingle-combine EXPRESSION is exploded and all k minima come from
+    one groupBy(doc_id).agg(min(...)): codegen'd arithmetic, where a
+    per-row array_min(transform(_sh, h -> ...)) per permutation runs k
+    interpreted lambdas per doc.  Partial aggregation collapses each
+    doc's shingles inside the task, so the one exchange carries at most
+    one row per doc per input partition.
+
+    Trap: never explode a PROJECTED `_sh` column.  On an attribute,
+    InferFiltersFromGenerate adds `size(_sh) > 0`; pushed below the
+    projection it inlines `_th` three times per shingle, and the build
+    turns quadratic per document (about 100x the CPU)."""
+    sh = th.select("doc_id", F.explode(F.expr(_SHINGLES)).alias("_h"))
+    return sh.groupBy("doc_id").agg(
+        *[
+            F.min(F.expr(f"pmod(_h * {a}L + {b}L, {MINHASH_P}L)")).alias(f"{prefix}_{i}")
+            for i, (a, b) in enumerate(_perm_params(k))
+        ]
+    )
+
+
+def minhash_signatures(docs: DataFrame, n: int = 3, k: int = 32) -> DataFrame:
+    """K-permutation MinHash signatures over word-3-gram shingles: each
+    token hashed ONCE (xxhash64, reduced to 31 bits), then
+    `_minhash_kernel` — one shuffle, pre-aggregated map-side to at most
+    one row per doc per input partition.  The kernel explodes the
+    shingle expression, never a projected `_sh` column (that form
+    inlines the token hashes per shingle).  `doc_id` is the key: one
+    signature row per doc_id."""
     if n != 3:
         raise ValueError("arithmetic shingle combine is specialized to n=3")
-    toks = docs.select("doc_id", ws_tokens(F.col("text")).alias("_toks"))
-    # token hashes reduced to 31-bit BEFORE the polynomial combine so every
-    # intermediate stays << 2^63 (a < p and h < p, so a*h+b < 2^62 — no
-    # silent overflow even under ANSI mode)
-    hashed = toks.withColumn(
-        "_th", F.expr("transform(_toks, t -> pmod(xxhash64(t), 2147483647))")
-    ).withColumn(
-        "_sh",
-        F.expr(
-            "transform(sequence(1, greatest(size(_th)-2, 1)),"
-            " i -> pmod(ifnull(try_element_at(_th,i),0)*1000003"
-            "        + ifnull(try_element_at(_th,i+1),0)*8191"
-            "        + ifnull(try_element_at(_th,i+2),0), 2147483647))"
-        ),
-    )
-    return hashed.select(
-        "doc_id",
-        *[
-            F.array_min(
-                F.expr(f"transform(_sh, h -> pmod(h * {a}L + {b}L, {MINHASH_P}L))")
-            ).alias(f"mh_{i}")
-            for i, (a, b) in enumerate(_perm_params(k))
-        ],
-    )
+    return _minhash_kernel(_token_hashes(docs, "xxhash64(t)"), k, "mh")
 
 
 def minhash_lsh_pairs(
@@ -911,52 +936,28 @@ PORTABLE_MINHASH_K = 8
 PORTABLE_MINHASH_BANDS = 4
 
 
-def _portable_shingle_arrays(docs: DataFrame) -> DataFrame:
-    """(doc_id, _sh) where _sh is the md5-derived hashed-3-gram shingle
-    list — the engine-portable shingle construction shared by the
-    portable MinHash signatures and the dedup_eval ground truth (both
-    must sketch/score the SAME sets or the eval measures the wrong
-    estimator)."""
-    toks = docs.select("doc_id", ws_tokens(F.col("text")).alias("_toks"))
-    return toks.withColumn(
-        "_th",
-        F.expr(
-            "transform(_toks, t -> pmod(cast(conv(substring(md5(t), 1, 15), 16, 10)"
-            " as bigint), 2147483647))"
-        ),
-    ).withColumn(
-        "_sh",
-        F.expr(
-            "transform(sequence(1, greatest(size(_th)-2, 1)),"
-            " i -> pmod(ifnull(try_element_at(_th,i),0)*1000003"
-            "        + ifnull(try_element_at(_th,i+1),0)*8191"
-            "        + ifnull(try_element_at(_th,i+2),0), 2147483647))"
-        ),
-    )
+# md5-derived token hash (first 15 hex chars as an int — the hash_split
+# idiom, pipeline_ops.py): the portable MinHash signatures and the
+# dedup_eval ground truth both shingle it with `_SHINGLES` (both must
+# sketch/score the SAME sets or the eval measures the wrong estimator)
+_MD5_TOKEN_HASH = "cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint)"
 
 
 def minhash_portable_signatures(
     docs: DataFrame, k: int = PORTABLE_MINHASH_K, sh: DataFrame | None = None
 ) -> DataFrame:
     """MinHash signatures whose every hash is ENGINE-PORTABLE: token
-    hashes come from md5 (first 15 hex chars as an int — the hash_split
-    idiom, pipeline_ops.py) instead of xxhash64, so DuckDB reproduces the
-    signature bit-for-bit.  Same shingle combine and permutation family
-    as `minhash_signatures` (shared `_perm_params`); k=8 keeps the SQL
-    mirror tractable.  This exists so the MinHash FAMILY has a
-    hash-verified driver row — the production path stays
+    hashes come from md5 instead of xxhash64, so DuckDB reproduces the
+    signature bit-for-bit.  Same `_minhash_kernel` (shingle combine and
+    permutation family) as `minhash_signatures`; k=8 keeps the SQL
+    mirror tractable.  `doc_id` is the key: one signature row per doc_id.
+    `sh` is a precomputed `_token_hashes(docs, _MD5_TOKEN_HASH)` frame,
+    for a caller that shares the md5 pass.  This exists so the MinHash
+    FAMILY has a hash-verified driver row — the production path stays
     `minhash_signatures` (xxhash64 is JVM-side and ~10× cheaper than
     md5-hex-parse at scale)."""
-    hashed = _portable_shingle_arrays(docs) if sh is None else sh
-    return hashed.select(
-        "doc_id",
-        *[
-            F.array_min(
-                F.expr(f"transform(_sh, h -> pmod(h * {a}L + {b}L, {MINHASH_P}L))")
-            ).alias(f"pmh_{i}")
-            for i, (a, b) in enumerate(_perm_params(k))
-        ],
-    )
+    th = _token_hashes(docs, _MD5_TOKEN_HASH) if sh is None else sh
+    return _minhash_kernel(th, k, "pmh")
 
 
 def minhash_portable_pairs(
@@ -983,7 +984,7 @@ def minhash_portable_pairs(
     # persist/finally-unpersist pair is gone before the caller ever
     # materializes — banding and both verify sides each rebuilt the md5
     # signatures from the raw text.  `sh` lets a caller that already built
-    # the shingle arrays (dedup_eval's ground-truth side) share the scan.
+    # the token hashes (dedup_eval's ground-truth side) share the scan.
     sig = minhash_portable_signatures(docs, k, sh=sh).localCheckpoint(eager=False)
     band_arr = F.array(
         *[
@@ -1054,8 +1055,8 @@ def _portable_bands_sql(k: int = PORTABLE_MINHASH_K, bands: int = PORTABLE_MINHA
 
 
 # t/h/shl: the md5-derived hashed-3-gram shingle lists (the SQL mirror of
-# `_portable_shingle_arrays`), shared by the portable-MinHash oracle and
-# the dedup_eval ground truth.
+# `_MD5_TOKEN_HASH` + `_SHINGLES`), shared by the portable-MinHash
+# oracle and the dedup_eval ground truth.
 _PORTABLE_SHL_CTES = r"""t AS (
   SELECT doc_id,
     list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS toks
@@ -1132,8 +1133,8 @@ def dedup_eval(
     report a curation run publishes before trusting a sketch-based
     dedup pass (the dedup-side analogue of ``retrieval_eval``).
 
-    Truth and estimator score the SAME sets: both sides consume
-    `_portable_shingle_arrays` (md5-hashed 3-gram shingles), so the
+    Truth and estimator score the SAME sets: both sides shingle
+    `_MD5_TOKEN_HASH` token hashes with `_SHINGLES`, so the
     eval isolates MinHash/LSH error (k=8 quantization + band misses)
     from tokenization differences.  Truth pairs come from the exact
     inverted-index self-join (`_gram_pair_counts_from`) over distinct
@@ -1153,18 +1154,14 @@ def dedup_eval(
     slice (the operator composes with `doc_sample`), never the full
     corpus; the LSH side under eval is the same plan as production.
     Output is O(|thresholds|) rows."""
-    # ONE tokenize+md5 shingle pass feeds BOTH the exact ground truth and
-    # the MinHash estimator under eval (guide §2.4: don't recompute what
-    # two branches share) — narrow to (doc_id, _sh) before materializing
-    sh = (
-        _portable_shingle_arrays(docs)
-        .select("doc_id", "_sh")
-        .localCheckpoint(eager=False)
-    )
+    # ONE tokenize+md5 pass feeds BOTH the exact ground truth and the
+    # MinHash estimator under eval (guide §2.4: don't recompute what two
+    # branches share) — (doc_id, _th) is materialized once
+    th = _token_hashes(docs, _MD5_TOKEN_HASH).localCheckpoint(eager=False)
     # postings feed three consumers (sizes + both join sides): cut lineage
     # once, same rationale as _gram_pair_counts
     postings = (
-        sh.select("doc_id", F.explode(F.array_distinct("_sh")).alias("g"))
+        th.select("doc_id", F.explode(F.array_distinct(F.expr(_SHINGLES))).alias("g"))
         .localCheckpoint()
     )
     jac = F.round(
@@ -1173,7 +1170,7 @@ def dedup_eval(
     truth = _gram_pair_counts_from(postings).select(
         "doc_a", "doc_b", jac.alias("jac")
     )
-    pred = minhash_portable_pairs(docs, threshold=min(thresholds), sh=sh)
+    pred = minhash_portable_pairs(docs, threshold=min(thresholds), sh=th)
     both = truth.join(pred, ["doc_a", "doc_b"], "full_outer").select(
         F.coalesce(F.col("jac"), F.lit(0.0)).alias("jac"),
         # never-predicted pairs score below every threshold
@@ -1580,40 +1577,35 @@ ORDER BY band
 # ---------------------------------------------------------------------------
 
 
-def _local_components(p: DataFrame) -> DataFrame:
-    """Single-task union-find over a small pair list (Arrow-batched
-    applyInPandas; executor-side, never the driver).  Same output contract
-    as the iterative path: (cluster_id = min doc_id in component, doc_id)
-    for every vertex that appears in a pair."""
-    import pandas as pd  # noqa: PLC0415 — executor-side import
+def _union_find(pdf):
+    """Union-find over a (doc_a, doc_b) pandas frame: a pandas frame of
+    (cluster_id = min doc_id in component, doc_id) for every vertex that
+    appears in a pair — the same output contract as the iterative path."""
+    import pandas as pd  # noqa: PLC0415 — only the small-graph path needs it
 
-    def uf(pdf: pd.DataFrame) -> pd.DataFrame:
-        parent: dict = {}
+    parent: dict = {}
 
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:  # path compression
-                parent[x], x = root, parent[x]
-            return root
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:  # path compression
+            parent[x], x = root, parent[x]
+        return root
 
-        for a, b in zip(pdf["doc_a"], pdf["doc_b"]):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        verts = set(pdf["doc_a"]) | set(pdf["doc_b"])
-        rows = [(find(v), v) for v in sorted(verts)]
-        return pd.DataFrame(rows, columns=["cluster_id", "doc_id"])
-
-    return p.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        uf, "cluster_id long, doc_id long"
-    )
+    for a, b in zip(pdf["doc_a"].tolist(), pdf["doc_b"].tolist()):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    verts = set(pdf["doc_a"].tolist()) | set(pdf["doc_b"].tolist())
+    rows = [(find(v), v) for v in sorted(verts)]
+    return pd.DataFrame(rows, columns=["cluster_id", "doc_id"], dtype="int64")
 
 
-# below this many pairs the component graph comfortably fits one task and
-# local union-find beats rounds of tiny shuffles (the same size-adaptive
-# logic as Spark's broadcast-join threshold)
+# below this many pairs the component graph is collected to the driver and
+# union-found there, instead of rounds of tiny shuffles — Spark's
+# broadcast-build-side rule: 2M pairs x 16 B = 32 MB, under the session's
+# 64 MB autoBroadcastJoinThreshold
 LOCAL_COMPONENTS_THRESHOLD = 2_000_000
 
 
@@ -1625,15 +1617,17 @@ def dup_clusters(
     """Turn a near-dup PAIR list into dedup GROUPS: connected components,
     cluster_id = min doc_id in the component (what a pipeline keeps).
 
-    Size-adaptive: the pair list is counted once (it is materialized
-    anyway); small graphs (< LOCAL_COMPONENTS_THRESHOLD pairs) run
-    single-task union-find (O(E α) — one Arrow batch, no per-round
-    shuffles), large graphs run distributed iterative min-label
-    propagation — per round each vertex takes the min of its own label
-    and its neighbors', one equi-join + one groupBy per round, converging
-    in O(component diameter) rounds (near-dup clusters are small;
-    max_iter bounds adversarial chains).  Every step is hash-partitioned
-    on doc_id; the driver sees only counts.  Labels are persisted per
+    Size-adaptive: one bounded collect (`limit(local_threshold)`) of the
+    materialized pair list decides.  Small graphs (< local_threshold
+    pairs, long ids) are union-found in the driver (O(E α), no job beyond
+    the collect) and come back as a local frame typed
+    `cluster_id long, doc_id long`; an empty pair list gives an empty
+    frame.  Large graphs run distributed iterative min-label propagation
+    — per round each vertex takes the min of its own label and its
+    neighbors', one equi-join + one groupBy per round, converging in
+    O(component diameter) rounds (near-dup clusters are small; max_iter
+    bounds adversarial chains).  Every step is hash-partitioned on
+    doc_id; the driver sees only counts.  Labels are checkpointed per
     round so lineage stays O(1) instead of O(iterations)."""
     # cut the pair lineage first: the symmetric union references `pairs`
     # twice, so without materialization the (expensive) pair computation
@@ -1641,9 +1635,15 @@ def dup_clusters(
     p = pairs.select("doc_a", "doc_b").localCheckpoint()
     from pyspark.sql.types import LongType
 
-    ids_are_long = isinstance(p.schema["doc_a"].dataType, LongType)
-    if ids_are_long and p.count() < local_threshold:
-        return _local_components(p)
+    if isinstance(p.schema["doc_a"].dataType, LongType):
+        small = p.limit(local_threshold).toPandas()
+        if len(small) < local_threshold:
+            # from pandas, not a row list: with Arrow on this is a local
+            # relation that joins by broadcast, where a row list becomes
+            # an RDD of pickled rows that costs a second of CPU to read
+            return p.sparkSession.createDataFrame(
+                _union_find(small), "cluster_id long, doc_id long"
+            )
     # no .distinct(): duplicate edges are harmless under min-aggregation,
     # and near-dup pair lists are already unique — dropping it removes a
     # full shuffle of the edge list
@@ -1865,11 +1865,13 @@ def minhash_dedup_e2e(docs: DataFrame, sig: DataFrame | None = None) -> DataFram
     the keep-list partitions the corpus exactly.
 
     Scale: each stage is the registered operator's plan unchanged —
-    narrow signature projection, banded equi-joins with the hot-bucket
-    star cap, size-adaptive components, per-cluster (never global)
-    ranking window.  The signature table is the one reusable artifact;
-    production writes it next to the corpus snapshot (`_minhash_sig_for`)
-    and this composition reads it back."""
+    shingle explode + one partially-aggregated k-wide min per doc_id,
+    banded equi-joins with the hot-bucket star cap, size-adaptive
+    components (driver union-find below `LOCAL_COMPONENTS_THRESHOLD`
+    pairs), per-cluster (never global) ranking window.  The signature
+    table is the one reusable artifact; production writes it next to the
+    corpus snapshot (`_minhash_sig_for`) and this composition reads it
+    back."""
     if sig is None:
         sig = minhash_signatures(docs)
     pairs = minhash_lsh_pairs(None, sig=sig)

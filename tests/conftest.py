@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
 
 import pytest
@@ -40,15 +41,20 @@ def duck():
 # launched here at collection time it overlaps the several hundred other
 # tests (optimization guide §2.6 applied to the suite itself) and
 # test_all_queries_on_default_session merely joins it.  Only launched when
-# that test was actually collected (so `pytest tests/test_dedup.py` never
-# pays for it).
+# that test is still selected after collection and -k/-m deselection (so
+# `pytest tests/test_dedup.py` never pays for it), and stopped at session
+# end if nothing joined it.
 
 _VANILLA_PROC = {}
 
 
+# trylast: runs after pytest's own -k/-m deselection hooks; --collect-only
+# runs no test, so it launches nothing either
+@pytest.hookimpl(trylast=True)
 def pytest_collection_modifyitems(config, items):
+    if config.getoption("collectonly"):
+        return
     if any(i.name == "test_all_queries_on_default_session" for i in items):
-        import subprocess
         import tempfile
 
         from tests.vanilla_gate import SCRIPT
@@ -72,9 +78,35 @@ def pytest_collection_modifyitems(config, items):
         _VANILLA_PROC.update(proc=proc, out=out, err=err)
 
 
-@pytest.fixture(scope="session")
+@pytest.fixture
 def vanilla_gate_proc():
     assert _VANILLA_PROC.get("proc") is not None, (
         "collection hook did not launch the vanilla gate"
     )
-    return _VANILLA_PROC
+    yield _VANILLA_PROC
+    # the joining test has read both logs by now
+    _close_gate_logs(_VANILLA_PROC)
+
+
+def pytest_sessionfinish(session, exitstatus):
+    """Stop a gate subprocess nothing joined (the joining test failed early
+    or was interrupted) and remove its temp logs."""
+    proc = _VANILLA_PROC.get("proc")
+    if proc is not None and proc.poll() is None:
+        proc.terminate()
+        try:
+            proc.wait(timeout=30)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+    _close_gate_logs(_VANILLA_PROC)
+
+
+def _close_gate_logs(gate: dict) -> None:
+    """Close and unlink the gate's stdout/stderr temp logs (idempotent)."""
+    for key in ("out", "err"):
+        fh = gate.pop(key, None)
+        if fh is not None:
+            fh.close()
+            if os.path.exists(fh.name):
+                os.unlink(fh.name)

@@ -62,6 +62,123 @@ def test_minhash_signature_shape(spark):
     assert [row[f"mh_{i}"] for i in range(16)] == [row3[f"mh_{i}"] for i in range(16)]
 
 
+# The per-row kernel the shared `_minhash_kernel` replaced, kept verbatim
+# as the reference: the shingle array is materialized per doc and each
+# permutation's minimum is one array_min(transform(...)) lambda.
+XXHASH_TH = "transform(_toks, t -> pmod(xxhash64(t), 2147483647))"
+MD5_TH = (
+    "transform(_toks, t -> pmod(cast(conv(substring(md5(t), 1, 15), 16, 10)"
+    " as bigint), 2147483647))"
+)
+
+
+def _reference_signatures(docs, th_expr, k, prefix):
+    from realparse_spark.operators.dedup import MINHASH_P, _perm_params
+    from realparse_spark.operators.text import ws_tokens
+
+    toks = docs.select("doc_id", ws_tokens(F.col("text")).alias("_toks"))
+    hashed = toks.withColumn("_th", F.expr(th_expr)).withColumn(
+        "_sh",
+        F.expr(
+            "transform(sequence(1, greatest(size(_th)-2, 1)),"
+            " i -> pmod(ifnull(try_element_at(_th,i),0)*1000003"
+            "        + ifnull(try_element_at(_th,i+1),0)*8191"
+            "        + ifnull(try_element_at(_th,i+2),0), 2147483647))"
+        ),
+    )
+    return hashed.select(
+        "doc_id",
+        *[
+            F.array_min(
+                F.expr(f"transform(_sh, h -> pmod(h * {a}L + {b}L, {MINHASH_P}L))")
+            ).alias(f"{prefix}_{i}")
+            for i, (a, b) in enumerate(_perm_params(k))
+        ],
+    )
+
+
+EDGE_TEXTS = [
+    "",
+    None,
+    "alpha",
+    "alpha beta",
+    "\t\t\t",
+    "\n\n\n",
+    "   ",
+    " \t\n alpha\t\t beta\n\n  gamma   delta \t",
+]
+
+
+def _corpus_docs(spark):
+    from realparse_spark.sources.tables import load_table
+
+    return load_table(spark, "/root/testdata/sf0.01", "documents").select("doc_id", "text")
+
+
+def _parity_docs(spark):
+    edge = spark.createDataFrame(
+        [(10**9 + i, t) for i, t in enumerate(EDGE_TEXTS)], "doc_id long, text string"
+    )
+    return _corpus_docs(spark).unionByName(edge)
+
+
+def test_minhash_kernel_matches_reference_bit_for_bit(spark):
+    """Both MinHash families run through the one aggregate kernel; their
+    signatures must equal the per-row array_min reference exactly, over
+    the corpus plus empty, NULL, 1-token, 2-token and whitespace-run
+    documents."""
+    from realparse_spark.operators.dedup import minhash_portable_signatures
+
+    docs = _parity_docs(spark).localCheckpoint()
+    cases = [
+        (minhash_signatures(docs, n=3, k=32), _reference_signatures(docs, XXHASH_TH, 32, "mh")),
+        (minhash_signatures(docs, n=3, k=16), _reference_signatures(docs, XXHASH_TH, 16, "mh")),
+        (minhash_portable_signatures(docs, 8), _reference_signatures(docs, MD5_TH, 8, "pmh")),
+    ]
+    n_docs = docs.count()
+    for got, want in cases:
+        assert got.count() == n_docs
+        assert got.exceptAll(want).count() == 0, got.columns[1]
+        assert want.exceptAll(got).count() == 0, got.columns[1]
+
+
+def _single_hash_with_partial_agg(sig, hash_fn: str) -> bool:
+    """Plan pin for the signature kernel: the token hash appears ONCE in
+    the optimized plan (the explode trap inlines it per shingle), and the
+    executed plan pre-aggregates per doc below the signature exchange."""
+    qe = sig._jdf.queryExecution()
+    if qe.optimizedPlan().toString().count(f"{hash_fn}(") != 1:
+        return False
+    lines = qe.executedPlan().toString().splitlines()
+    ex = [i for i, ln in enumerate(lines) if "Exchange hashpartitioning(doc_id" in ln]
+    return bool(ex) and any(
+        "HashAggregate" in ln and "partial_min(" in ln for ln in lines[ex[0] + 1 :]
+    )
+
+
+def test_minhash_kernel_plan_pinned(spark):
+    from realparse_spark.operators.dedup import (
+        _SHINGLES,
+        minhash_portable_signatures,
+    )
+    from realparse_spark.operators.text import ws_tokens
+
+    docs = _corpus_docs(spark)
+    assert _single_hash_with_partial_agg(minhash_signatures(docs), "xxhash64")
+    assert _single_hash_with_partial_agg(minhash_portable_signatures(docs), "md5")
+    # the pin catches the trap: exploding a PROJECTED shingle column lets
+    # InferFiltersFromGenerate inline the token hashes per shingle
+    trap = (
+        docs.select("doc_id", ws_tokens(F.col("text")).alias("_toks"))
+        .select("doc_id", F.expr(XXHASH_TH).alias("_th"))
+        .select("doc_id", F.expr(_SHINGLES).alias("_sh"))
+        .select("doc_id", F.explode("_sh").alias("_h"))
+        .groupBy("doc_id")
+        .agg(F.min("_h").alias("mh_0"))
+    )
+    assert not _single_hash_with_partial_agg(trap, "xxhash64")
+
+
 def test_simhash_finds_near_dups(spark):
     pairs = {
         (r.doc_a, r.doc_b): r.hamming
@@ -72,9 +189,11 @@ def test_simhash_finds_near_dups(spark):
     assert (4, 5) not in pairs         # unrelated -> far apart
 
 
-def test_dup_clusters_match_union_find(spark):
+def test_dup_clusters_match_union_find(spark, monkeypatch):
     """Label propagation must produce exactly the components a reference
     union-find does — chains (diameter > 1), a triangle, isolated pairs."""
+    from realparse_spark.operators import dedup
+
     pairs = [
         (1, 2), (2, 3), (3, 4), (4, 5),      # chain: min label walks 4 hops
         (10, 11), (11, 12), (10, 12),        # triangle
@@ -98,14 +217,29 @@ def test_dup_clusters_match_union_find(spark):
     expected = {min(c): frozenset(c) for c in want.values()}
 
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    # both strategies must agree with the reference: the single-task
-    # union-find (small graphs) AND the distributed min-label iteration
-    # (forced via local_threshold=0)
-    for threshold in (10**6, 0):
+    # both strategies must agree with the reference: the driver-side
+    # union-find (fewer pairs than local_threshold) AND the distributed
+    # min-label iteration.  The 9 pairs pin the boundary: threshold 10
+    # takes the driver, 9 (and 0) the distributed path.
+    calls = []
+    real = dedup._union_find
+    monkeypatch.setattr(dedup, "_union_find", lambda pdf: calls.append(len(pdf)) or real(pdf))
+    for threshold, driver_path in ((10**6, True), (10, True), (9, False), (0, False)):
+        calls.clear()
         got: dict[int, set[int]] = {}
         for r in dup_clusters(df, local_threshold=threshold).collect():
             got.setdefault(r.cluster_id, set()).add(r.doc_id)
         assert {k: frozenset(v) for k, v in got.items()} == expected, threshold
+        assert calls == ([len(pairs)] if driver_path else []), threshold
+
+
+def test_dup_clusters_empty_pairs(spark):
+    """No pairs -> no clusters, on both paths, typed like a full result."""
+    empty = spark.createDataFrame([], "doc_a long, doc_b long")
+    for threshold in (10, 0):
+        out = dup_clusters(empty, local_threshold=threshold)
+        assert out.schema.simpleString() == "struct<cluster_id:bigint,doc_id:bigint>"
+        assert out.count() == 0
 
 
 def test_ngram_cap_binding_pins_subcap_jaccard(spark):
